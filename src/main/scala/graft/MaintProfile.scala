@@ -266,14 +266,14 @@ object MaintProfile {
     (0 until 3 * nGroups).grouped(perSeg).foreach(batch =>
       engine.save(batch.map(i => docYaml(i / 3, i % 3)).mkString))
     val tBuild = timed { engine.dupGroups().collect(); () }
-    require(engine.lastDupMode.contains("rebuild"),
-      s"dupfold expected a rebuild, got ${engine.lastDupMode}")
+    require(engine.lastArm("dupgroups").contains("rebuild"),
+      s"dupfold expected a rebuild, got ${engine.lastArm("dupgroups")}")
     // fixed-size batch: 10 new triplets (30 docs)
     engine.save((0 until 30).map(i =>
       docYaml(nGroups + i / 3, i % 3)).mkString)
     val tFold = timed { engine.dupGroups().collect(); () }
-    require(engine.lastDupMode.contains("append"),
-      s"dupfold expected the fold arm, got ${engine.lastDupMode}")
+    require(engine.lastArm("dupgroups").contains("append"),
+      s"dupfold expected the fold arm, got ${engine.lastArm("dupgroups")}")
     val n = engine.dupGroups().count()
     require(n == 3L * (nGroups + 10),
       s"dupfold labeling incomplete: $n of ${3 * (nGroups + 10)}")
@@ -292,7 +292,7 @@ object MaintProfile {
       .toDF("id", "change", "body", "metadata")
       .withColumn("commit_version", lit(0L)))
     val tRouted = timed { engine.dupGroups().collect(); () }
-    val routedMode = engine.lastDupMode.getOrElse("?")
+    val routedMode = engine.lastArm("dupgroups").getOrElse("?")
     val n2 = engine.dupGroups().count()
     require(n2 == 3L * (nGroups + 10) - 10,
       s"dupfold post-patch labeling incomplete: $n2")
@@ -305,8 +305,9 @@ object MaintProfile {
       .toDF("id", "change", "body", "metadata")
       .withColumn("commit_version", lit(1L)))
     val tRetract = timed { engine.dupGroups().collect(); () }
-    require(engine.lastDupMode.contains("retract"),
-      s"dupfold expected the forced retract arm, got ${engine.lastDupMode}")
+    require(engine.lastArm("dupgroups").contains("retract"),
+      s"dupfold expected the forced retract arm, got " +
+        engine.lastArm("dupgroups"))
     // the 10 doubly-hit groups are singletons now (one survivor each),
     // so they leave the labeling entirely (groups are size ≥ 2)
     val n3 = engine.dupGroups().count()

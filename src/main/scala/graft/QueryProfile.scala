@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** Per-job profile of one or more named bench queries (measurement harness,
@@ -48,11 +48,6 @@ object QueryProfile {
       }
       override def onJobEnd(je: SparkListenerJobEnd): Unit = {
         Option(jobs.get(je.jobId)).foreach(j => j.wallMs = je.time - j.t0)
-      }
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val sid = sc.stageInfo.stageId
-        jobs.values().forEach { j => () } // no-op; stages attributed at start
-        val _ = sid
       }
     }
     args.foreach { name =>

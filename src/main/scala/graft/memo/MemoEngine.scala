@@ -6,7 +6,9 @@ import java.util.Comparator
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.KnownNotNull
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftShims
 
 import graft.filter.FilterAlgebra
 import graft.functions.GraftFunctions._
@@ -730,16 +732,11 @@ class MemoEngine(spark: SparkSession, basePath: String,
         s"override id ${missing(0).getLong(0)} does not exist") // memo_cli.py:427
       val maxId = maxRecordId
       val hasOverrides = overrides.limit(1).count() > 0
-      // fresh ids: dense, minted in input order (file, off, seq) —
-      // distributed via sort + zipWithIndex, never a single-partition window
-      val minted = entries.filter(col("id").isNull)
-        .sort(col("file"), col("off"), col("seq")).rdd.zipWithIndex()
-        .map { case (r, i) =>
-          org.apache.spark.sql.Row(r.getString(0), r.getLong(1), r.getInt(2),
-            maxId + 1 + i, r.getString(4), r.getMap[String, String](5))
-        }
-      val mintedDf = spark.createDataFrame(minted, YamlIO.saveEntrySchema)
-      val resolved = overrides.unionByName(mintedDf).cache()
+      // fresh ids: dense, minted in input order (file, off, seq)
+      val minted = MemoOps.withSequentialIds(
+        entries.filter(col("id").isNull).drop("id"),
+        Seq("file", "off", "seq"), "id", maxId + 1, None)
+      val resolved = overrides.unionByName(minted).cache()
       val batchDf = resolved.select("id", "body", "metadata")
       val idsDf = resolved.select("id")
       try {
@@ -871,8 +868,11 @@ class MemoEngine(spark: SparkSession, basePath: String,
         if (batch.columns.contains("metadata")) batch
         else batch.withColumn("metadata",
           lit(null).cast("map<string,string>"))
+      // the filter proves body non-null; declaring it keeps the minted
+      // frame on the records schema (body NOT NULL at rest)
       val cleaned = withMeta.filter(!isBlank(col("body")))
-        .select(col("body"), col("metadata"))
+        .select(GraftShims.column(KnownNotNull(
+          GraftShims.expression(col("body")))).as("body"), col("metadata"))
       // Batch shape in ONE cheap no-shuffle agg: the row count (the
       // empty-batch gate, now paid BEFORE any sort/cache work) and the
       // body bytes that size the mint sort. The sort's width scales with
@@ -899,30 +899,15 @@ class MemoEngine(spark: SparkSession, basePath: String,
           case Some((ver, m)) if v0.contains(ver) => m
           case _ => maxRecordId
         }
-        // mint in INTERNAL rows (`toRdd` + internalCreateDataFrame): the
-        // external-Row round trip decoded every body AND converted every
-        // metadata MapData to a Scala Map per row, then re-encoded both —
-        // pure overhead on the per-batch hot path. `copy()` before
-        // retaining: toRdd rows are reused buffers.
-        // repartitionByRange + sortWithinPartitions ≡ sort (same global
-        // body order, same tie class) with the width chosen above.
-        val minted = org.apache.spark.sql.graftshim.GraftShims
-          .toInternalRdd(cleaned
-            .repartitionByRange(mintParts, col("body"))
-            .sortWithinPartitions(col("body")))
-          .zipWithIndex()
-          .map { case (r, i) =>
-            val row = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-            row(org.apache.spark.sql.catalyst.InternalRow(maxId + 1 + i),
-              r.copy()): org.apache.spark.sql.catalyst.InternalRow
-          }
-        // persist: the commit evaluates the mint pipeline for the index
-        // write, the records write, and (on compaction commits) the id
-        // joins — without a pin each one re-runs the sort over the
-        // source micro-batch (the parallel segment writes fill it via
-        // the block manager's one-computes-others-wait contract)
-        val batchDf = org.apache.spark.sql.graftshim.GraftShims
-          .internalCreateDataFrame(spark, minted, YamlIO.recordSchema)
+        // mint sorted by body over `mintParts` ranges; persist: the
+        // commit evaluates the mint pipeline for the index write, the
+        // records write, and (on compaction commits) the id joins —
+        // without a pin each one re-runs the sort over the source
+        // micro-batch (the parallel segment writes fill it via the block
+        // manager's one-computes-others-wait contract)
+        val batchDf = MemoOps.withSequentialIds(cleaned, Seq("body"), "id",
+            maxId + 1, Some(mintParts))
+          .select(col("id"), col("body"), col("metadata"))
           .cache()
         try {
           val v = v0 match {
@@ -939,35 +924,21 @@ class MemoEngine(spark: SparkSession, basePath: String,
     }
   }
 
-  /** The store's maintained BM25 postings artifact ([[graft.ops.Lexical]]
-    * layout), living beside the version chain (`_lexical/` — not a
-    * `v<N>` dir, so [[vacuum]] never sweeps it; [[clean]] drops it with
-    * the store). */
-  private def lexDir: String = base.resolve("_lexical").toString
-  private val LexVersionFile = "_store_version"
+  /** Every engine-maintained artifact family lives beside the version
+    * chain at `_<family>/` (`_lexical`, `_ivf`, `_ivfpq`, `_minhash`,
+    * `_dupgroups` — not `v<N>` dirs, so [[vacuum]] never sweeps them;
+    * [[clean]] drops them with the store). */
+  private def familyDir(family: String): String =
+    base.resolve("_" + family).toString
+  private def lexDir: String = familyDir("lexical")
 
-  /** Bring the postings artifact to the live store version — the
-    * maintenance that makes [[hybridRecall]] O(probe) instead of two
-    * corpus scans per call. Pull-based and exactly-once:
-    *
-    *  - FRESH (artifact's recorded store version == live): zero work, no
-    *    corpus scan — the check is two metadata file reads;
-    *  - BEHIND on an append-only chain (the live manifest EXTENDS the
-    *    recorded version's): each new segment rides
-    *    [[graft.ops.Lexical.appendOnce]] with `batchId` = the segment's
-    *    version under the `storev` lineage — O(new segments), and a
-    *    crash-window replay repairs in place (the journal tag matches);
-    *  - BEHIND on a rewrite (overwrite/reindex/import compacted the
-    *    chain, or the old version was vacuumed): full rebuild, same as
-    *    the first call.
-    *
-    * Maintenance is charged to the reader that needs the artifact (the
-    * streamAppend-rides-the-commit idiom would tax every CLI save for an
-    * artifact most never query); the version watermark makes the lazy
-    * catch-up exactly-once regardless of when it runs. Corpus = records
-    * with non-blank bodies, per segment — the same corpus
-    * [[graft.ops.Lexical.scoreBm25]] sees, so the two hybrid paths rank
-    * identically (LexicalSpec's bit-exactness contract). */
+  /** A family's watermark: the store version its artifact is current
+    * at (absent, or -1 while a dup spec change awaits its rebuild). */
+  private val WatermarkFile = "_store_version"
+  private def familyWatermark(artDir: String): Option[Long] =
+    ArtifactMeta.read(spark, artDir, WatermarkFile)
+      .flatMap(_.toLongOption).filter(_ >= 0)
+
   /** Test seam: fires inside [[ensureLexical]]'s locked catch-up arm,
     * before any artifact work — lets a spec interleave a foreign store
     * commit deterministically into the window (pinning that the catch-up
@@ -975,29 +946,71 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * production. */
   private[graft] var beforeLexicalBuildHook: () => Unit = () => ()
 
-  /** The version-watermark maintenance skeleton every engine-maintained
-    * artifact family shares (lexical postings, IVF, IVF-PQ, minhash
-    * signatures). Fast path: the recorded watermark equals the live
-    * version → serve lock-free, touching nothing. Stale path, under the
-    * artifact's build lock (double-checked): if the live `kind` manifest
-    * EXTENDS the recorded version's and every new segment path parses to
-    * a version (vacuumed/rewritten chains fall through to a rebuild),
-    * catch up O(new segments) via `appendSeg`; otherwise — or if an
-    * append trips on a torn/missing artifact (`IllegalStateException`) —
-    * `rebuild` from THE CAPTURED VERSION's segments, never the live
-    * view: a concurrent commit during the rebuild would otherwise land
-    * docs in the artifact that the recorded watermark below says are NOT
-    * there yet, and the next catch-up would re-append them (duplicate
-    * rows, the disjoint-id contract violated). The watermark advances
-    * only when the family has something to serve (`out.isDefined`), so
-    * an empty corpus re-evaluates next call instead of caching absence. */
-  private def ensureArtifact[A](artDir: String, kind: String,
+  /** Which arm each family's last [[ensureArtifact]] walk took — "fresh"
+    * | "append" | "retract" | "rebuild" — keyed by family name ("lexical",
+    * "ivf", "ivfpq", "minhash", "dupgroups"). Specs pin arms through it;
+    * the q119 oracle entry and MaintProfile's dupfold leg read the
+    * "dupgroups" arm. */
+  private val arms = new java.util.concurrent.ConcurrentHashMap[String, String]
+  private[graft] def lastArm(family: String): Option[String] =
+    Option(arms.get(family))
+
+  /** The ONE version-watermark lifecycle every engine-maintained artifact
+    * family shares (lexical postings, IVF, IVF-PQ, minhash signatures, dup
+    * labels); a family passes only its ops. Maintenance is pull-based and
+    * charged to the reader that needs the artifact (the
+    * streamAppend-rides-the-commit idiom would tax every CLI save for an
+    * artifact most never query); the watermark makes the lazy catch-up
+    * exactly-once regardless of when it runs. Four arms, recorded in
+    * [[lastArm]]:
+    *
+    *  - FRESH: the recorded watermark equals the live version → `serve`
+    *    lock-free, touching nothing (two metadata file reads).
+    *  - APPEND: under the artifact's build lock (double-checked), the live
+    *    manifest EXTENDS the recorded version's and every new segment
+    *    path parses to a version → `appendSeg` each new segment with the
+    *    version that committed it — O(new segments). A text family
+    *    (`vector = false`) walks the `records` chain and gets the
+    *    segment's non-blank (id, body) corpus, a vector family the raw
+    *    `index` segment.
+    *  - RETRACT: a rewritten chain (patch/overwrite/reindex, vacuumed
+    *    prior) — or an append that trips on a torn/missing artifact
+    *    (`IllegalStateException`) — first offers the window from the
+    *    recorded watermark to `retract` (the journaled
+    *    [[familyRetract]] fold, or the dup labeling's own
+    *    [[tryDupRetract]]); an accepted fold serves.
+    *  - REBUILD: a refused fold `rebuild`s from THE CAPTURED VERSION's
+    *    segments, never the live view: a concurrent commit during the
+    *    rebuild would otherwise land docs in the artifact that the
+    *    recorded watermark below says are NOT there yet, and the next
+    *    catch-up would re-append them (duplicate rows, the disjoint-id
+    *    contract violated). A successful rebuild rewrites the artifact
+    *    wholesale, so it clears any [[RetractJournal]] a crashed fold
+    *    left.
+    *
+    * The watermark advances only when the family has something to serve
+    * (`out.isDefined`), so an empty corpus re-evaluates next call instead
+    * of caching absence. */
+  private def ensureArtifact[A](family: String, vector: Boolean,
       beforeLocked: () => Unit = () => ())(
-      appendSeg: (String, Long) => Unit, rebuild: Long => Option[A],
-      serve: () => Option[A]): Option[A] =
+      appendSeg: (DataFrame, Long) => Unit,
+      retract: (Long, Long) => Boolean, rebuild: Long => Option[A],
+      serve: () => Option[A]): Option[A] = {
+    val artDir = familyDir(family)
+    val kind = if (vector) "index" else "records"
+    arms.put(family, "fresh")
+    def retractOrRebuild(v: Long): Option[A] =
+      if (familyWatermark(artDir).exists(retract(_, v))) {
+        arms.put(family, "retract")
+        serve()
+      } else {
+        arms.put(family, "rebuild")
+        val out = rebuild(v)
+        if (out.isDefined) ArtifactMeta.delete(spark, artDir, RetractJournal)
+        out
+      }
     currentVersion.flatMap { v =>
-      def recorded = ArtifactMeta.read(spark, artDir, LexVersionFile)
-        .flatMap(_.toLongOption)
+      def recorded = familyWatermark(artDir)
       if (recorded.contains(v)) serve()
       else ArtifactMeta.withBuildLock(spark, artDir) {
         if (recorded.contains(v)) serve() // double-checked under the lock
@@ -1023,122 +1036,119 @@ class MemoEngine(spark: SparkSession, basePath: String,
           }
           val out = delta match {
             case Some(extra) =>
-              try { extra.foreach((appendSeg).tupled); serve() }
-              catch { case _: IllegalStateException => rebuild(v) }
-            case None => rebuild(v)
+              try {
+                extra.foreach { case (seg, ver) =>
+                  arms.put(family, "append")
+                  appendSeg(if (vector) spark.read.parquet(seg)
+                    else bodyCorpus(Seq(seg)), ver)
+                }
+                serve()
+              } catch { case _: IllegalStateException => retractOrRebuild(v) }
+            case None => retractOrRebuild(v)
           }
           if (out.isDefined)
-            ArtifactMeta.write(spark, artDir, LexVersionFile, v.toString)
+            ArtifactMeta.write(spark, artDir, WatermarkFile, v.toString)
           out
         }
       }
     }
+  }
 
   private def bodyCorpus(paths: Seq[String]): DataFrame =
     spark.read.parquet(paths: _*)
       .filter(!isBlank(col("body"))).select(col("id"), col("body"))
 
+  /** Bring the postings artifact to the live store version — the
+    * maintenance that makes [[hybridRecall]] O(probe) instead of two
+    * corpus scans per call. Each new segment rides
+    * [[graft.ops.Lexical.appendOnce]] with `batchId` = the segment's
+    * version under the `storev` lineage, so a crash-window replay repairs
+    * in place (the journal tag matches). The retract fold tombstones dead
+    * docs (negative df deltas retreat the termstats, probes anti-join the
+    * tombstones) and appends added docs — O(touched) vs re-tokenizing the
+    * corpus; BM25 keeps the Lucene deleted-docs convention: idf/N/avgdl
+    * retreat exactly by the deleted docs' own stats. Corpus = records
+    * with non-blank bodies, per segment — the same corpus
+    * [[graft.ops.Lexical.scoreBm25]] sees, so the two hybrid paths rank
+    * identically (LexicalSpec's bit-exactness contract). */
   private def ensureLexical(): Unit = {
-    lastLexMode = Some("fresh")
-    ensureArtifact[Unit](lexDir, "records", beforeLexicalBuildHook)(
-      appendSeg = (seg, ver) => {
-        lastLexMode = Some("append")
-        graft.ops.Lexical.appendOnce(
-          bodyCorpus(Seq(seg)), "id", "body", lexDir,
-          batchId = ver, lineage = "storev")
-      },
+    ensureArtifact[Unit]("lexical", vector = false, beforeLexicalBuildHook)(
+      appendSeg = (seg, ver) => graft.ops.Lexical.appendOnce(
+        seg, "id", "body", lexDir, batchId = ver, lineage = "storev"),
+      retract = familyRetract(lexDir, vector = false)(
+        graft.ops.Lexical.delete(_, "id", "body", lexDir),
+        graft.ops.Lexical.append(_, "id", "body", lexDir)),
       rebuild = v => {
-        // RETRACT arm ([[familyRetract]]): a pure-delete/add patch
-        // tombstones dead docs (negative df deltas retreat the
-        // termstats, probes anti-join the tombstones) and appends added
-        // docs — O(touched) vs re-tokenizing the corpus. BM25 keeps the
-        // Lucene deleted-docs convention: idf/N/avgdl retreat exactly by
-        // the deleted docs' own stats.
-        if (familyWatermark(lexDir).exists(v0 =>
-            familyRetract(lexDir, v0, v, vector = false)(
-              d => graft.ops.Lexical.delete(d, "id", "body", lexDir))(
-              a => graft.ops.Lexical.append(a, "id", "body", lexDir))))
-          lastLexMode = Some("retract")
-        else {
-          lastLexMode = Some("rebuild")
-          graft.ops.Lexical.writeIndex(
-            bodyCorpus(segments(v, "records")), "id", "body", lexDir)
-          ArtifactMeta.delete(spark, lexDir, RetractJournal)
-        }
+        graft.ops.Lexical.writeIndex(
+          bodyCorpus(segments(v, "records")), "id", "body", lexDir)
         Some(())
       },
       serve = () => Some(()))
     ()
   }
 
-  private[graft] def ivfDir: String = base.resolve("_ivf").toString
+  private[graft] def ivfDir: String = familyDir("ivf")
 
-  /** [[ensureLexical]]'s version-watermark idiom generalized to the
-    * vector-artifact family: keep a persisted IVF index
-    * ([[graft.ops.IvfIndex]]) in lockstep with the store's committed
-    * `index` chain, so a memo store serves ANN without hand-built
-    * indexes. Same three-arm shape:
-    *
-    *  - watermark current → serve the stored centroids lock-free (no
-    *    corpus scan, no stamp re-validation — the version file IS the
-    *    freshness proof);
-    *  - append-only chain growth → O(new segments) catch-up via
-    *    [[graft.ops.IvfIndex.append]] (centroids reused, new rows land
-    *    as new files in existing cell partitions; a coarse quantizer
-    *    does not need retraining for an ingest increment);
-    *  - chain rewrite (reindex/import/overwrite) or torn artifact →
-    *    full rebuild from the CAPTURED version's segments (not the live
-    *    view — the [[ensureLexical]] race argument verbatim), with
-    *    nlist re-derived from the corpus size.
+  /** [[ensureArtifact]] on the vector-artifact family: keep a persisted
+    * IVF index ([[graft.ops.IvfIndex]]) in lockstep with the store's
+    * committed `index` chain, so a memo store serves ANN without
+    * hand-built indexes. Fresh serves the stored centroids lock-free (the
+    * version file IS the freshness proof); appends land new rows as new
+    * files in existing cell partitions, centroids reused (a coarse
+    * quantizer does not need retraining for an ingest increment); the
+    * retract fold tombstones dead vectors (probes anti-join them until
+    * [[graft.ops.IvfIndex.applyDeletes]] compacts the affected cells) and
+    * cell-appends added ones, centroids untouched (a delete perturbs the
+    * quantizer no more than an ingest increment; occupancy drift is the
+    * retrain trigger's job either way); a rebuild re-derives nlist from
+    * the corpus size.
     *
     * Returns the centroid matrix, or None for an empty corpus (no cells
     * to probe — callers fall back to the exact ranking). */
-  private def ensureIvf(): Option[Array[Array[Float]]] = {
-    lastIvfMode = Some("fresh")
-    ensureArtifact(ivfDir, "index")(
-      appendSeg = (seg, _) => {
-        lastIvfMode = Some("append")
-        graft.ops.IvfIndex.append(
-          spark.read.parquet(seg), "id", "embedding", ivfDir)
-        ()
-      },
-      rebuild = v => {
-        // RETRACT arm ([[familyRetract]]): a pure-delete/add patch
-        // tombstones dead vectors (probes anti-join them until
-        // [[graft.ops.IvfIndex.applyDeletes]] compacts the affected
-        // cells) and cell-appends added vectors — O(touched), centroids
-        // untouched (a delete perturbs the coarse quantizer no more than
-        // an ingest increment; occupancy drift is the retrain trigger's
-        // job either way)
-        if (familyWatermark(ivfDir).exists(v0 =>
-            familyRetract(ivfDir, v0, v, vector = true)(
-              d => graft.ops.IvfIndex.delete(d, "id", "embedding", ivfDir))(
-              a => { graft.ops.IvfIndex.append(a, "id", "embedding", ivfDir)
-                     () }))) {
-          lastIvfMode = Some("retract")
-          graft.ops.IvfIndex.readCentroids(spark, ivfDir)
-        } else {
-          lastIvfMode = Some("rebuild")
-          val out = rebuildIvf(v)
-          if (out.isDefined)
-            ArtifactMeta.delete(spark, ivfDir, RetractJournal)
-          out
-        }
+  private def ensureIvf(): Option[Array[Array[Float]]] =
+    ensureArtifact("ivf", vector = true)(
+      appendSeg = (seg, _) =>
+        graft.ops.IvfIndex.append(seg, "id", "embedding", ivfDir),
+      retract = familyRetract(ivfDir, vector = true)(
+        graft.ops.IvfIndex.delete(_, "id", "embedding", ivfDir),
+        graft.ops.IvfIndex.append(_, "id", "embedding", ivfDir)),
+      rebuild = v => trainFrom(v) { (corpus, n) =>
+        graft.ops.IvfIndex.buildIfAbsent(corpus, "id", "embedding",
+          math.min(MemoEngine.AnnNlist.toLong, n).toInt, ivfDir)
       },
       serve = () => graft.ops.IvfIndex.readCentroids(spark, ivfDir))
-  }
 
-  /** Rebuild arm of [[ensureIvf]]: train + persist from the captured
-    * version's index segments. nlist scales as min(default, corpus size)
-    * so tiny stores train (trainCentroids requires sample ≥ nlist) and
-    * grown stores keep bounded cells. */
-  private def rebuildIvf(v: Long): Option[Array[Array[Float]]] = {
+  /** The vector families' rebuild: train + persist from the captured
+    * version's index segments, None for an empty corpus. nlist (and PQ's
+    * ksub) scale as min(default, corpus size) so tiny stores train
+    * (training requires sample ≥ nlist) and grown stores keep bounded
+    * cells. */
+  private def trainFrom[A](v: Long)(build: (DataFrame, Long) => A)
+      : Option[A] = {
     val corpus = scanOf(v, "index")
     val n = corpus.count()
-    if (n == 0) None
-    else Some(graft.ops.IvfIndex.buildIfAbsent(corpus, "id", "embedding",
-      math.min(MemoEngine.AnnNlist.toLong, n).toInt, ivfDir))
+    if (n == 0) None else Some(build(corpus, n))
   }
+
+  /** The IVF and IVF-PQ twins differ only in these ops, so the drift
+    * statistic, the retrain and [[maintain]]'s tombstone apply each run
+    * once for both. */
+  private case class VectorFamily(name: String, dir: String,
+      ensure: () => Option[Array[Array[Float]]],
+      occupancy: () => Option[Array[Long]],
+      compact: (DataFrame, Double) => Boolean,
+      applyDeletes: () => Boolean)
+
+  private def ivfFamily = VectorFamily("ivf", ivfDir, () => ensureIvf(),
+    () => graft.ops.IvfIndex.readOccupancy(spark, ivfDir),
+    graft.ops.IvfIndex.compact(_, "id", "embedding", ivfDir, _),
+    () => graft.ops.IvfIndex.applyDeletes(spark, ivfDir))
+
+  private def pqFamily = VectorFamily("ivfpq", pqDir,
+    () => ensurePq().map(_._1),
+    () => graft.ops.PqIndex.readOccupancy(spark, pqDir),
+    graft.ops.PqIndex.compactIvfPq(_, "id", "embedding", pqDir, _),
+    () => graft.ops.PqIndex.applyDeletesIvfPq(spark, pqDir))
 
   /** Occupancy-drift statistic of the maintained IVF artifact:
     * max/median occupancy over non-empty cells (1.0 = perfectly
@@ -1150,14 +1160,13 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * cells and probe cost quietly degrades toward O(hot cell); this is
     * the cheap signal an operator (or [[retrainIvf]]) watches. None
     * when no artifact exists. */
-  def ivfSkew(): Option[Double] =
-    graft.ops.IvfIndex.readOccupancy(spark, ivfDir)
-      .map(o => graft.ops.IvfIndex.occupancySkew(o.toSeq))
+  def ivfSkew(): Option[Double] = skewOf(ivfFamily)
 
   /** [[ivfSkew]] on the compressed (IVF-PQ) artifact. */
-  def pqSkew(): Option[Double] =
-    graft.ops.PqIndex.readOccupancy(spark, pqDir)
-      .map(o => graft.ops.IvfIndex.occupancySkew(o.toSeq))
+  def pqSkew(): Option[Double] = skewOf(pqFamily)
+
+  private def skewOf(f: VectorFamily): Option[Double] =
+    f.occupancy().map(o => graft.ops.IvfIndex.occupancySkew(o.toSeq))
 
   /** Retrain-on-drift maintenance for the IVF family: bring the
     * artifact current (the standard [[ensureIvf]] walk), then — ONLY if
@@ -1175,33 +1184,19 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * that policy made incremental — appends stay O(batch), the retrain
     * fires only on measured drift. Returns true iff a rewrite
     * happened. */
-  def retrainIvf(maxSkew: Double = 4.0): Boolean = {
-    if (ensureIvf().isEmpty) return false
-    ArtifactMeta.withBuildLock(spark, ivfDir) {
-      ArtifactMeta.read(spark, ivfDir, LexVersionFile)
-        .flatMap(_.toLongOption).exists { v0 =>
-          graft.ops.IvfIndex.compact(
-            scanOf(v0, "index"),
-            "id", "embedding", ivfDir, maxSkew)
-        }
-    }
-  }
+  def retrainIvf(maxSkew: Double = 4.0): Boolean = retrain(ivfFamily, maxSkew)
 
   /** [[retrainIvf]] on the compressed artifact ([[ensurePq]] +
     * [[graft.ops.PqIndex.compactIvfPq]] — coarse quantizer AND
     * codebooks retrain together; ADC codes are meaningless under new
     * centroids). */
-  def retrainPq(maxSkew: Double = 4.0): Boolean = {
-    if (ensurePq().isEmpty) return false
-    ArtifactMeta.withBuildLock(spark, pqDir) {
-      ArtifactMeta.read(spark, pqDir, LexVersionFile)
-        .flatMap(_.toLongOption).exists { v0 =>
-          graft.ops.PqIndex.compactIvfPq(
-            scanOf(v0, "index"),
-            "id", "embedding", pqDir, maxSkew)
-        }
+  def retrainPq(maxSkew: Double = 4.0): Boolean = retrain(pqFamily, maxSkew)
+
+  private def retrain(f: VectorFamily, maxSkew: Double): Boolean =
+    f.ensure().isDefined && ArtifactMeta.withBuildLock(spark, f.dir) {
+      familyWatermark(f.dir).exists(v0 =>
+        f.compact(scanOf(v0, "index"), maxSkew))
     }
-  }
 
   /** Test seam for the FILTERED ANN serving paths ([[annRecall]]/
     * [[pqRecall]] with a filter): (final nprobe, widening retries) of the
@@ -1341,8 +1336,9 @@ class MemoEngine(spark: SparkSession, basePath: String,
           .select(col("id"), col("score"), col("body"))
     }
 
-  /** Test seam: which arm [[recallServe]] took ("brute" | "ann") and
-    * the survivor upper bound it decided on. Production never reads it. */
+  /** Which arm [[recallServe]] took ("brute" | "ann" | "pq") and the
+    * survivor upper bound it decided on. Read by specs, the q111 oracle
+    * entry and the perfbench serve-route counts. */
   private[graft] var lastServeRoute: Option[(String, Long)] = None
 
   /** Widening-rung caches, keyed by SERVING-CALL TOKEN. A fill ladder
@@ -1749,58 +1745,30 @@ class MemoEngine(spark: SparkSession, basePath: String,
     } finally endServingCall(srvTok)
   }
 
-  private def pqDir: String = base.resolve("_ivfpq").toString
+  private def pqDir: String = familyDir("ivfpq")
 
-  /** [[ensureIvf]]'s idiom on the COMPRESSED vector family: keep a
-    * persisted IVF-PQ index ([[graft.ops.PqIndex]]) in lockstep with the
-    * store's committed `index` chain. Same three arms — watermark-current
-    * serves lock-free off the stored (centroids, codebooks); append-only
-    * growth catches up O(new segments) via
-    * [[graft.ops.PqIndex.appendIvfPq]] (both quantizers reused — an
-    * ingest increment does not retrain); a chain rewrite or torn
-    * artifact rebuilds from the CAPTURED version's segments (the
-    * [[ensureLexical]] race argument verbatim). nlist/ksub clamp to the
-    * corpus size on rebuild so tiny stores still train. */
-  private def ensurePq(): Option[(Array[Array[Float]], Array[Array[Array[Float]]])] = {
-    lastPqMode = Some("fresh")
-    ensureArtifact(pqDir, "index")(
-      appendSeg = (seg, _) => {
-        lastPqMode = Some("append")
-        graft.ops.PqIndex.appendIvfPq(
-          spark.read.parquet(seg), "id", "embedding", pqDir)
-      },
-      rebuild = v => {
-        // RETRACT arm — [[ensureIvf]]'s argument on the compressed
-        // family: tombstone dead codes, encode-append added vectors,
-        // both quantizers untouched
-        if (familyWatermark(pqDir).exists(v0 =>
-            familyRetract(pqDir, v0, v, vector = true)(
-              d => graft.ops.PqIndex.deleteIvfPq(d, "id", "embedding", pqDir))(
-              a => graft.ops.PqIndex.appendIvfPq(a, "id", "embedding", pqDir)))) {
-          lastPqMode = Some("retract")
-          graft.ops.PqIndex.ivfPqMetaAt(spark, pqDir)
-        } else {
-          lastPqMode = Some("rebuild")
-          val out = rebuildPq(v)
-          if (out.isDefined)
-            ArtifactMeta.delete(spark, pqDir, RetractJournal)
-          out
-        }
+  /** [[ensureIvf]] on the COMPRESSED vector family: keep a persisted
+    * IVF-PQ index ([[graft.ops.PqIndex]]) in lockstep with the store's
+    * committed `index` chain. Fresh serves lock-free off the stored
+    * (centroids, codebooks); appends encode new segments with both
+    * quantizers reused (an ingest increment does not retrain); the
+    * retract fold tombstones dead codes and encode-appends added
+    * vectors, both quantizers untouched; a rebuild clamps nlist/ksub to
+    * the corpus size so tiny stores still train. */
+  private def ensurePq(): Option[(Array[Array[Float]], Array[Array[Array[Float]]])] =
+    ensureArtifact("ivfpq", vector = true)(
+      appendSeg = (seg, _) =>
+        graft.ops.PqIndex.appendIvfPq(seg, "id", "embedding", pqDir),
+      retract = familyRetract(pqDir, vector = true)(
+        graft.ops.PqIndex.deleteIvfPq(_, "id", "embedding", pqDir),
+        graft.ops.PqIndex.appendIvfPq(_, "id", "embedding", pqDir)),
+      rebuild = v => trainFrom(v) { (corpus, n) =>
+        graft.ops.PqIndex.buildIfAbsentIvfPq(corpus, "id", "embedding",
+          nlist = math.min(MemoEngine.AnnNlist.toLong, n).toInt,
+          m = MemoEngine.AnnPqM,
+          ksub = math.min(MemoEngine.AnnPqKsub.toLong, n).toInt, pqDir)
       },
       serve = () => graft.ops.PqIndex.ivfPqMetaAt(spark, pqDir))
-  }
-
-  /** Rebuild arm of [[ensurePq]]: train + encode from the captured
-    * version's index segments. */
-  private def rebuildPq(v: Long): Option[(Array[Array[Float]], Array[Array[Array[Float]]])] = {
-    val corpus = scanOf(v, "index")
-    val n = corpus.count()
-    if (n == 0) None
-    else Some(graft.ops.PqIndex.buildIfAbsentIvfPq(corpus, "id", "embedding",
-      nlist = math.min(MemoEngine.AnnNlist.toLong, n).toInt,
-      m = MemoEngine.AnnPqM,
-      ksub = math.min(MemoEngine.AnnPqKsub.toLong, n).toInt, pqDir))
-  }
 
   /** Compressed ANN over the engine-MAINTAINED IVF-PQ artifact
     * ([[ensurePq]]): probe cells prune at file-listing time, the ADC
@@ -1877,24 +1845,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
           .select(col("id"), col("score"), col("body"))
     }
 
-  private def sigDir: String = base.resolve("_minhash").toString
-
-  /** The version-watermark idiom on the DEDUP family: keep a persisted
-    * MinHash signature artifact ([[graft.ops.Dedup.writeSignatures]])
-    * in lockstep with the store's records, so admission checks scan 64
-    * longs/doc instead of re-minhashing the corpus. Append-only growth
-    * signs just the new segments ([[graft.ops.Dedup.appendSignatures]],
-    * O(batch)); rewrites rebuild from the captured version. Corpus =
-    * non-blank bodies (the [[ensureLexical]] corpus rule). */
-  /** Test seam: which arm the last [[ensureSignatures]] walk took —
-    * "fresh" | "append" | "retract" | "rebuild". Production never
-    * reads it. */
-  private[graft] var lastSigMode: Option[String] = None
-
-  /** [[lastSigMode]]'s twins for the other maintained families. */
-  private[graft] var lastLexMode: Option[String] = None
-  private[graft] var lastIvfMode: Option[String] = None
-  private[graft] var lastPqMode: Option[String] = None
+  private def sigDir: String = familyDir("minhash")
 
   /** One classified v0→v records diff, shared by every maintenance
     * consumer of the window — the four [[familyRetract]] walks AND the
@@ -2174,10 +2125,9 @@ class MemoEngine(spark: SparkSession, basePath: String,
     * nothing, and stamp facts retreat by the empty set's zero totals) —
     * the journal write-then-clear around a vacuous fold is then just a
     * watermark advance. */
-  private def familyRetract(artDir: String, v0: Long, v: Long,
-      vector: Boolean)(
-      deleteRows: DataFrame => Unit)(appendRows: DataFrame => Unit)
-      : Boolean = {
+  private def familyRetract(artDir: String, vector: Boolean)(
+      deleteRows: DataFrame => Unit, appendRows: DataFrame => Unit)(
+      v0: Long, v: Long): Boolean = {
     if (ArtifactMeta.read(spark, artDir, RetractJournal).isDefined)
       return false // crashed prior fold: only the rebuild may repair
     retractableDiff(v0, v).exists { d =>
@@ -2206,7 +2156,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
           // the caller's write (ensureArtifact) lands after this arm
           // returns, and a crash between the two would otherwise replay
           // the fold against an already-folded artifact
-          ArtifactMeta.write(spark, artDir, LexVersionFile, v.toString)
+          ArtifactMeta.write(spark, artDir, WatermarkFile, v.toString)
           ArtifactMeta.delete(spark, artDir, RetractJournal)
           true
         }
@@ -2217,35 +2167,26 @@ class MemoEngine(spark: SparkSession, basePath: String,
     }
   }
 
-  private def familyWatermark(artDir: String): Option[Long] =
-    ArtifactMeta.read(spark, artDir, LexVersionFile)
-      .flatMap(_.toLongOption).filter(_ >= 0)
-
+  /** [[ensureArtifact]] on the DEDUP family: keep a persisted MinHash
+    * signature artifact ([[graft.ops.Dedup.writeSignatures]]) in lockstep
+    * with the store's records, so admission checks scan 64 longs/doc
+    * instead of re-minhashing the corpus. Appends sign just the new
+    * segments ([[graft.ops.Dedup.appendSignatures]], O(batch)); the
+    * retract fold tombstones dead rows ([[graft.ops.Dedup.deleteSignatures]]
+    * — [[graft.ops.Dedup.loadSignatures]] anti-joins them, so every
+    * signature consumer sees the retraction immediately) and signs added
+    * rows. Corpus = non-blank bodies (the [[ensureLexical]] corpus
+    * rule). */
   private def ensureSignatures(): Unit = {
-    lastSigMode = Some("fresh")
-    ensureArtifact[Unit](sigDir, "records")(
-      appendSeg = (seg, _) => {
-        lastSigMode = Some("append")
-        graft.ops.Dedup.appendSignatures(
-          bodyCorpus(Seq(seg)), "id", "body", sigDir)
-      },
+    ensureArtifact[Unit]("minhash", vector = false)(
+      appendSeg = (seg, _) =>
+        graft.ops.Dedup.appendSignatures(seg, "id", "body", sigDir),
+      retract = familyRetract(sigDir, vector = false)(
+        graft.ops.Dedup.deleteSignatures(_, "id", "body", sigDir),
+        graft.ops.Dedup.appendSignatures(_, "id", "body", sigDir)),
       rebuild = v => {
-        // RETRACT arm ([[familyRetract]]): a pure-delete/add patch
-        // tombstones dead rows ([[graft.ops.Dedup.deleteSignatures]] —
-        // [[graft.ops.Dedup.loadSignatures]] anti-joins them, so every
-        // signature consumer sees the retraction immediately) and signs
-        // added rows, O(touched) instead of re-minhashing the corpus
-        if (familyWatermark(sigDir).exists(v0 =>
-            familyRetract(sigDir, v0, v, vector = false)(
-              d => graft.ops.Dedup.deleteSignatures(d, "id", "body", sigDir))(
-              a => graft.ops.Dedup.appendSignatures(a, "id", "body", sigDir))))
-          lastSigMode = Some("retract")
-        else {
-          lastSigMode = Some("rebuild")
-          graft.ops.Dedup.writeSignatures(
-            bodyCorpus(segments(v, "records")), "id", "body", sigDir)
-          ArtifactMeta.delete(spark, sigDir, RetractJournal)
-        }
+        graft.ops.Dedup.writeSignatures(
+          bodyCorpus(segments(v, "records")), "id", "body", sigDir)
         Some(())
       },
       serve = () => Some(()))
@@ -2269,13 +2210,9 @@ class MemoEngine(spark: SparkSession, basePath: String,
       case None => batch
     }
 
-  private def dupDir: String = base.resolve("_dupgroups").toString
+  private def dupDir: String = familyDir("dupgroups")
   private val DupLabelsPtr = "_labels_ptr"
   private val DupSpecFile = "_dup_spec"
-
-  /** Test seam: which arm the last [[dupGroups]] walk took — "fresh" |
-    * "append" | "retract" | "rebuild". Production never reads it. */
-  private[graft] var lastDupMode: Option[String] = None
 
   private def dupLabelsSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("id",
@@ -2592,8 +2529,7 @@ class MemoEngine(spark: SparkSession, basePath: String,
       val out = serveDupLabels()
       val specOk = ArtifactMeta.read(spark, dupDir, DupSpecFile)
         .contains(spec)
-      val markOk = ArtifactMeta.read(spark, dupDir, LexVersionFile)
-        .flatMap(_.toLongOption).exists(_ >= 0)
+      val markOk = familyWatermark(dupDir).isDefined
       val ptrOk = ArtifactMeta.read(spark, dupDir, DupLabelsPtr) == ptrBefore
       if (specOk && markOk && ptrOk) return out
       if (attempt >= 5) throw new IllegalStateException(
@@ -2611,51 +2547,40 @@ class MemoEngine(spark: SparkSession, basePath: String,
     if (!ArtifactMeta.read(spark, dupDir, DupSpecFile).contains(spec))
       ArtifactMeta.withBuildLock(spark, dupDir) {
         if (!ArtifactMeta.read(spark, dupDir, DupSpecFile).contains(spec)) {
-          ArtifactMeta.write(spark, dupDir, LexVersionFile, "-1")
+          ArtifactMeta.write(spark, dupDir, WatermarkFile, "-1")
           ArtifactMeta.write(spark, dupDir, DupSpecFile, spec)
         }
       }
-    lastDupMode = Some("fresh")
-    ensureArtifact[Unit](dupDir, "records",
+    ensureArtifact[Unit]("dupgroups", vector = false,
         // skip the signature re-walk when its watermark is already at
         // the live version: the walk would be two metadata reads and a
-        // no-op, but it stomps [[lastSigMode]] to "fresh" — a maintain()
-        // pass that just took the retract/rebuild arm must keep its
-        // recorded mode (seam hygiene; the TOCTOU here is the same
-        // lock-free fresh-serve race ensureSignatures itself runs)
+        // no-op, but it stomps the "minhash" [[lastArm]] to "fresh" — a
+        // maintain() pass that just took the retract/rebuild arm must
+        // keep its recorded arm (seam hygiene; the TOCTOU here is the
+        // same lock-free fresh-serve race ensureSignatures itself runs)
         beforeLocked = () =>
           if (!currentVersion.exists(v =>
               familyWatermark(sigDir).contains(v)))
             ensureSignatures())(
       appendSeg = (seg, _) => {
-        lastDupMode = Some("append")
         val pairs = graft.ops.Dedup.signaturePairs(
           graft.ops.Dedup.loadSignatures(spark, sigDir),
           minJaccard = minJaccard,
-          newIds = Some(bodyCorpus(Seq(seg)).select(col("id"))))
+          newIds = Some(seg.select(col("id"))))
         // O(touched) publish: the fold's delta rewrites only the label
         // shards it touches ([[publishDupLabelsDelta]])
         val (chg, ups) = graft.ops.Dedup.componentsIncrementalDelta(
           serveDupLabels(), pairs, "a", "b")
         publishDupLabelsDelta(chg, ups)
       },
-      rebuild = v => {
-        // the recorded watermark is still the PRE-walk version here
-        // (ensureArtifact stamps it only after this arm returns): with
-        // a resolvable prior, fold the patch incrementally
-        // ([[tryDupRetract]] — touched components only) before paying
-        // the corpus-wide from-scratch labeling
-        val v0 = ArtifactMeta.read(spark, dupDir, LexVersionFile)
-          .flatMap(_.toLongOption).filter(_ >= 0)
-        if (v0.exists(tryDupRetract(_, v, minJaccard)))
-          lastDupMode = Some("retract")
-        else {
-          lastDupMode = Some("rebuild")
-          val pairs = graft.ops.Dedup.signaturePairs(
-            graft.ops.Dedup.loadSignatures(spark, sigDir),
-            minJaccard = minJaccard)
-          publishDupLabels(graft.ops.Dedup.components(pairs, "a", "b"))
-        }
+      // a resolvable prior folds the patch incrementally (touched
+      // components only) before paying the corpus-wide labeling
+      retract = tryDupRetract(_, _, minJaccard),
+      rebuild = _ => {
+        val pairs = graft.ops.Dedup.signaturePairs(
+          graft.ops.Dedup.loadSignatures(spark, sigDir),
+          minJaccard = minJaccard)
+        publishDupLabels(graft.ops.Dedup.components(pairs, "a", "b"))
         Some(())
       },
       serve = () => Some(()))
@@ -4375,14 +4300,6 @@ class MemoEngine(spark: SparkSession, basePath: String,
     }
   }
 
-  /** Bring EVERY registered view to the live store version in one call —
-    * the post-batch maintenance hook (run after a bulk ingest instead of
-    * letting each view's next reader pay its catch-up). Each view's
-    * recorded spec is decoded from its own meta, so callers don't
-    * restate groupKey/measures; refreshes ride the standard locked path,
-    * each step's delta/feed read O(changed rows). Returns name → refresh
-    * mode ("fresh" / "incremental" / "incremental_rescan" / "rebuild";
-    * "skipped" for a meta this build can't decode). */
   /** One-call POST-INGEST maintenance — the nightly-maintenance shape
     * at scale: bring EVERY engine-maintained artifact current against
     * the live committed version (BM25 postings, IVF, IVF-PQ, admission
@@ -4400,12 +4317,12 @@ class MemoEngine(spark: SparkSession, basePath: String,
     if (currentVersion.isEmpty) return Map("store" -> "empty")
     val b = scala.collection.mutable.LinkedHashMap.empty[String, String]
     ensureLexical(); b += "lexical" -> "current"
-    val ivf = ensureIvf()
-    b += ("ivf" -> ivf.map(c => s"current (nlist ${c.length})")
-      .getOrElse("empty"))
-    val pq = ensurePq()
-    b += ("ivfpq" -> pq.map(c => s"current (nlist ${c._1.length})")
-      .getOrElse("empty"))
+    val vecs = Seq(ivfFamily, pqFamily).map { f =>
+      val centroids = f.ensure()
+      b += (f.name -> centroids.map(c => s"current (nlist ${c.length})")
+        .getOrElse("empty"))
+      f -> centroids.isDefined
+    }
     ensureSignatures(); b += "signatures" -> "current"
     // the dup-group labeling is maintained only for stores that asked
     // for it (its spec file records the registered threshold) — maintain
@@ -4418,12 +4335,9 @@ class MemoEngine(spark: SparkSession, basePath: String,
     // retract fold (or an explicit artifact delete) leaves pending
     // tombstones the probes anti-join; applying them rewrites ONLY the
     // affected cells, and is a metadata read when nothing is pending
-    if (ivf.isDefined)
-      b += ("ivf_apply" -> (if (graft.ops.IvfIndex
-          .applyDeletes(spark, ivfDir)) "applied" else "none pending"))
-    if (pq.isDefined)
-      b += ("ivfpq_apply" -> (if (graft.ops.PqIndex
-          .applyDeletesIvfPq(spark, pqDir)) "applied" else "none pending"))
+    for ((f, live) <- vecs if live)
+      b += (s"${f.name}_apply" -> (if (f.applyDeletes()) "applied"
+        else "none pending"))
     // the postings family's apply is the LSM fold itself
     // ([[graft.ops.Lexical.compact]] — it rewrites the whole postings
     // table, not just affected partitions), so it runs only when a
@@ -4435,10 +4349,9 @@ class MemoEngine(spark: SparkSession, basePath: String,
     retrainSkew.foreach { t =>
       def skewStr(s: Option[Double]) =
         s.map(v => f"$v%.1f").getOrElse("n/a")
-      b += ("ivf_retrain" -> (if (retrainIvf(t)) "fired"
-        else s"skipped (skew ${skewStr(ivfSkew())})"))
-      b += ("ivfpq_retrain" -> (if (retrainPq(t)) "fired"
-        else s"skipped (skew ${skewStr(pqSkew())})"))
+      for ((f, _) <- vecs)
+        b += (s"${f.name}_retrain" -> (if (retrain(f, t)) "fired"
+          else s"skipped (skew ${skewStr(skewOf(f))})"))
     }
     refreshViews().foreach { case (n, st) => b += (s"view:$n" -> st) }
     // compaction AFTER the refresh walk: fragmentation is a property of
@@ -4454,6 +4367,14 @@ class MemoEngine(spark: SparkSession, basePath: String,
     b.toMap
   }
 
+  /** Bring EVERY registered view to the live store version in one call —
+    * the post-batch maintenance hook (run after a bulk ingest instead of
+    * letting each view's next reader pay its catch-up). Each view's
+    * recorded spec is decoded from its own meta, so callers don't
+    * restate groupKey/measures; refreshes ride the standard locked path,
+    * each step's delta/feed read O(changed rows). Returns name → refresh
+    * mode ("fresh" / "incremental" / "incremental_rescan" / "rebuild";
+    * "skipped" for a meta this build can't decode). */
   def refreshViews(): Map[String, String] =
     views.map { name =>
       val decoded = ArtifactMeta

@@ -205,25 +205,35 @@ object MemoOps {
     statsValues(records, filterExpr, key)
       .agg(countDistinct(metaDisplay(col("raw"))).as("n_distinct"))
 
-  /** Assign contiguous sequential ids `start, start+1, ...` in `orderCol`
-    * order. Scale path: range-repartition + per-partition sort +
-    * zipWithIndex — no single-partition window, works at any row count.
+  /** Assign contiguous sequential ids `start, start+1, ...` in
+    * `orderCols` order — the ONE id-minting primitive (reindex's
+    * re-sequencing, the bulk save's file-order mint, the stream's
+    * body-order mint). Scale path: range-repartition + per-partition
+    * sort + zipWithIndex — no single-partition window, works at any row
+    * count. `parts` fixes the range width (the stream sizes it from the
+    * batch's bytes); None takes `spark.sql.shuffle.partitions`.
     * (Dense-id invariant: memo_cli.py:102-108, :435.) The zip rides
     * INTERNAL rows (`toRdd` → `internalCreateDataFrame`): the external
     * `.rdd` twin decoded every body string and metadata map to external
     * objects and re-validated them through `createDataFrame`, per row —
     * pure per-task overhead (guide §1.2 step 2). `copy()` before
-    * retaining: toRdd rows are reused buffers. */
+    * retaining: toRdd rows are reused buffers. The id column is appended
+    * last. */
   def withSequentialIds(
       df: DataFrame,
-      orderCol: String,
+      orderCols: Seq[String],
       idName: String,
-      start: Long = 0L): DataFrame = {
+      start: Long,
+      parts: Option[Int]): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
     import org.apache.spark.sql.graftshim.GraftShims
     val spark = df.sparkSession
-    val sorted = df.repartitionByRange(col(orderCol))
-      .sortWithinPartitions(col(orderCol))
+    val order = orderCols.map(col)
+    val ranged = parts match {
+      case Some(n) => df.repartitionByRange(n, order: _*)
+      case None => df.repartitionByRange(order: _*)
+    }
+    val sorted = ranged.sortWithinPartitions(order: _*)
     val schema = sorted.schema.add(idName, LongType, nullable = false)
     val rdd = GraftShims.toInternalRdd(sorted).zipWithIndex()
       .map { case (r, i) =>
@@ -246,7 +256,7 @@ object MemoOps {
   def reindex(records: DataFrame): DataFrame = {
     val kept = records.filter(
       !isDeleted(col("metadata"), col("body")) && !isBlank(col("body")))
-    withSequentialIds(kept, "id", "new_id")
+    withSequentialIds(kept, Seq("id"), "new_id", 0L, None)
       .withColumnRenamed("id", "old_id")
       .withColumnRenamed("new_id", "id")
   }
@@ -257,7 +267,7 @@ object MemoOps {
       case r if r.isNullAt(0) => -1L
       case r => r.getLong(0)
     }
-    withSequentialIds(batch, orderCol, "new_id", maxId + 1)
+    withSequentialIds(batch, Seq(orderCol), "new_id", maxId + 1, None)
   }
 
   /** Overwrite-by-id validation (M2, memo_cli.py:424-433): every override id

@@ -1204,13 +1204,14 @@ object MemoQueries {
       if (engine.exists) engine.clean() // torn prior build: start over
       engine.save(yamlOf(0 until 58))
       engine.dupGroups().collect()
-      require(engine.lastDupMode.contains("rebuild"),
-        s"q119 expected the first walk to rebuild, got ${engine.lastDupMode}")
+      require(engine.lastArm("dupgroups").contains("rebuild"),
+        s"q119 expected the first walk to rebuild, got " +
+          engine.lastArm("dupgroups"))
       engine.save(yamlOf(58 until 90))
       val folded = engine.dupGroups().collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      require(engine.lastDupMode.contains("append"),
-        s"q119 expected the append fold, got ${engine.lastDupMode}")
+      require(engine.lastArm("dupgroups").contains("append"),
+        s"q119 expected the append fold, got ${engine.lastArm("dupgroups")}")
       val scratch = graft.ops.Dedup.nearDupClusters(
           engine.records.select(col("id"), col("body")), "id", "body")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -422,7 +422,7 @@ class MemoConcurrencySpec extends SparkTestBase {
     def body(k: Int) = s"clusterdoc$k alpha$k beta$k gamma$k delta$k"
     e1.save((0 until 24).map(i => s"---\nbody: ${body(i / 3)}\n").mkString)
     e1.dupGroups().collect() // initial rebuild
-    assert(e1.lastDupMode.contains("rebuild"))
+    assert(e1.lastArm("dupgroups").contains("rebuild"))
     val pool = Executors.newFixedThreadPool(2)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     def transient(e: Throwable): Boolean = {
@@ -444,7 +444,7 @@ class MemoConcurrencySpec extends SparkTestBase {
         while (!appender.isCompleted && rounds < 30) {
           try {
             e2.dupGroups().collect()
-            if (e2.lastDupMode.contains("append")) folds += 1
+            if (e2.lastArm("dupgroups").contains("append")) folds += 1
           } catch { case e: Throwable if transient(e) => () }
           rounds += 1
         }
@@ -459,9 +459,9 @@ class MemoConcurrencySpec extends SparkTestBase {
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       // non-vacuity: SOMETHING folded incrementally (a racing walk or
       // the final catch-up) — all-rebuild would not exercise the race
-      assert(folds >= 1 || e1.lastDupMode.contains("append"),
+      assert(folds >= 1 || e1.lastArm("dupgroups").contains("append"),
         s"no incremental fold ever ran (folds=$folds, " +
-          s"final=${e1.lastDupMode})")
+          s"final=${e1.lastArm("dupgroups")})")
       val scratch = graft.ops.Dedup.nearDupClusters(
           e1.records.select(col("id"), col("body")), "id", "body")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

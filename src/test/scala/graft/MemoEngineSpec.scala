@@ -1802,13 +1802,13 @@ class MemoEngineSpec extends SparkTestBase {
       graft.ops.Dedup.nearDupClusters(
         engine.records.select(col("id"), col("body")), "id", "body"))
     val l1 = labelsOf(engine.dupGroups())
-    assert(engine.lastDupMode.contains("rebuild"), engine.lastDupMode)
+    assert(engine.lastArm("dupgroups").contains("rebuild"), engine.lastArm("dupgroups"))
     assert(l1 == (0L until 24L).map(i => i -> (i / 3) * 3).toMap, l1)
     // fresh serve: metadata reads only, nothing rewritten
     val dupFiles = artifactFiles(db, "_dupgroups")
     val sigFiles = artifactFiles(db, "_minhash")
     engine.dupGroups().collect()
-    assert(engine.lastDupMode.contains("fresh"))
+    assert(engine.lastArm("dupgroups").contains("fresh"))
     assert(artifactFiles(db, "_dupgroups") == dupFiles,
       "a fresh dupGroups serve rewrote the labeling")
     // append: one doc joins cluster 2, two docs mint a NEW pair — the
@@ -1819,7 +1819,7 @@ class MemoEngineSpec extends SparkTestBase {
         s"---\nbody: ${clusterBody(100)}\n" +
         s"---\nbody: ${clusterBody(100)}\n")
     val l2 = labelsOf(engine.dupGroups())
-    assert(engine.lastDupMode.contains("append"), engine.lastDupMode)
+    assert(engine.lastArm("dupgroups").contains("append"), engine.lastArm("dupgroups"))
     assert(l2(24L) == 6L && l2(25L) == 25L && l2(26L) == 25L, l2)
     assert(l2 == oracle(), "fold diverged from the from-scratch labeling")
     val sigFiles2 = artifactFiles(db, "_minhash")
@@ -1832,7 +1832,7 @@ class MemoEngineSpec extends SparkTestBase {
     // touched id relabel; the removed id leaves the labeling and every
     // untouched group's label file survives byte-identical (the prior
     // generation is only REPLACED, so the O(touched) pin here is that
-    // the fold equals the oracle while lastDupMode proves the corpus-
+    // the fold equals the oracle while lastArm("dupgroups") proves the corpus-
     // wide components() never ran)
     val sigFilesPrePatch = artifactFiles(db, "_minhash")
     engine.applyChanges(Seq(
@@ -1840,11 +1840,11 @@ class MemoEngineSpec extends SparkTestBase {
       .toDF("id", "change", "body", "metadata")
       .withColumn("commit_version", lit(0L)))
     val l3 = labelsOf(engine.dupGroups())
-    assert(engine.lastDupMode.contains("retract"), engine.lastDupMode)
+    assert(engine.lastArm("dupgroups").contains("retract"), engine.lastArm("dupgroups"))
     // ...and the SIGNATURE family retracted too (tombstone fold — a
     // pure-delete patch must not re-minhash the corpus): every prior
     // signature parquet file survives byte-identical
-    assert(engine.lastSigMode.contains("retract"), engine.lastSigMode)
+    assert(engine.lastArm("minhash").contains("retract"), engine.lastArm("minhash"))
     artifactFiles(db, "_minhash").foreach { case (f, m) =>
       if (!f.contains("_tombstones") && !f.contains("_minhash_meta") &&
           sigFilesPrePatch.contains(f))
@@ -1867,7 +1867,7 @@ class MemoEngineSpec extends SparkTestBase {
       .toDF("id", "change", "body", "metadata")
       .withColumn("commit_version", lit(1L)))
     val l4 = labelsOf(engine.dupGroups())
-    assert(engine.lastDupMode.contains("retract"), engine.lastDupMode)
+    assert(engine.lastArm("dupgroups").contains("retract"), engine.lastArm("dupgroups"))
     assert(!l4.contains(9L) && !l4.contains(10L) && !l4.contains(11L),
       s"a group shrunk to one member must drop entirely: $l4")
     assert(l4 == oracle())
@@ -1877,11 +1877,11 @@ class MemoEngineSpec extends SparkTestBase {
     // group's new minimum (the whole gaining group must relabel)
     engine.save(s"---\nid: 4\nbody: ${clusterBody(2)}\n")
     val l5 = labelsOf(engine.dupGroups())
-    assert(engine.lastDupMode.contains("retract"), engine.lastDupMode)
+    assert(engine.lastArm("dupgroups").contains("retract"), engine.lastArm("dupgroups"))
     // a body EDIT cannot fold into the signature artifact (re-signing a
     // tombstoned id violates the append contract) — signatures rebuild
     // honestly while the LABELING still retracts O(touched)
-    assert(engine.lastSigMode.contains("rebuild"), engine.lastSigMode)
+    assert(engine.lastArm("minhash").contains("rebuild"), engine.lastArm("minhash"))
     assert(l5(4L) == 4L && l5(6L) == 4L && l5(24L) == 4L &&
       l5(3L) == 3L && l5(5L) == 3L, l5)
     assert(l5 == oracle())
@@ -1889,13 +1889,13 @@ class MemoEngineSpec extends SparkTestBase {
     // retract gate must fall through to the honest rebuild
     engine.reindex()
     val l6 = labelsOf(engine.dupGroups())
-    assert(engine.lastDupMode.contains("rebuild"), engine.lastDupMode)
-    assert(engine.lastSigMode.contains("rebuild"), engine.lastSigMode)
+    assert(engine.lastArm("dupgroups").contains("rebuild"), engine.lastArm("dupgroups"))
+    assert(engine.lastArm("minhash").contains("rebuild"), engine.lastArm("minhash"))
     assert(l6 == oracle())
     // threshold participates in identity: a different minJaccard
     // rebuilds under the new spec rather than serving the old labeling
     engine.dupGroups(0.5).collect()
-    assert(engine.lastDupMode.contains("rebuild"))
+    assert(engine.lastArm("dupgroups").contains("rebuild"))
     // maintain walks the REGISTERED threshold (the recorded spec)
     val report = engine.maintain()
     assert(report.get("dupgroups").exists(_.contains("0.5")), report)
@@ -1930,12 +1930,12 @@ class MemoEngineSpec extends SparkTestBase {
       .withColumn("commit_version", lit(0L)))
     assert(engine.dupGroups().collect().map(r =>
       r.getLong(0) -> r.getLong(1)).toMap == oracle())
-    assert(engine.lastSigMode.contains("rebuild"), engine.lastSigMode)
-    assert(engine.lastDupMode.contains("rebuild"), engine.lastDupMode)
+    assert(engine.lastArm("minhash").contains("rebuild"), engine.lastArm("minhash"))
+    assert(engine.lastArm("dupgroups").contains("rebuild"), engine.lastArm("dupgroups"))
     assert(engine.lastRetractRoute.exists(_.startsWith("rebuild(")),
       engine.lastRetractRoute)
     engine.maintain()
-    assert(engine.lastLexMode.contains("rebuild"), engine.lastLexMode)
+    assert(engine.lastArm("lexical").contains("rebuild"), engine.lastArm("lexical"))
     // a METADATA-ONLY patch under the same floor is a zero-touch window:
     // free fold in every family, never a rebuild, route never consulted
     engine.lastRetractRoute = None
@@ -1945,10 +1945,10 @@ class MemoEngineSpec extends SparkTestBase {
       .withColumn("commit_version", lit(1L)))
     assert(engine.dupGroups().collect().map(r =>
       r.getLong(0) -> r.getLong(1)).toMap == oracle())
-    assert(engine.lastSigMode.contains("retract"), engine.lastSigMode)
-    assert(engine.lastDupMode.contains("retract"), engine.lastDupMode)
+    assert(engine.lastArm("minhash").contains("retract"), engine.lastArm("minhash"))
+    assert(engine.lastArm("dupgroups").contains("retract"), engine.lastArm("dupgroups"))
     engine.maintain()
-    assert(engine.lastLexMode.contains("retract"), engine.lastLexMode)
+    assert(engine.lastArm("lexical").contains("retract"), engine.lastArm("lexical"))
     assert(engine.lastRetractRoute.isEmpty, engine.lastRetractRoute)
     // floor dropped: the next delete patch takes the fold and the route
     // seam says so
@@ -1958,8 +1958,8 @@ class MemoEngineSpec extends SparkTestBase {
       .withColumn("commit_version", lit(2L)))
     assert(engine.dupGroups().collect().map(r =>
       r.getLong(0) -> r.getLong(1)).toMap == oracle())
-    assert(engine.lastSigMode.contains("retract"), engine.lastSigMode)
-    assert(engine.lastDupMode.contains("retract"), engine.lastDupMode)
+    assert(engine.lastArm("minhash").contains("retract"), engine.lastArm("minhash"))
+    assert(engine.lastArm("dupgroups").contains("retract"), engine.lastArm("dupgroups"))
     assert(engine.lastRetractRoute.exists(_.startsWith("retract(")),
       engine.lastRetractRoute)
     engine.clean()
@@ -1996,8 +1996,8 @@ class MemoEngineSpec extends SparkTestBase {
       .withColumn("commit_version", lit(1L)))
     assert(engine.dupGroups().collect().map(r =>
       r.getLong(0) -> r.getLong(1)).toMap == oracle())
-    assert(engine.lastSigMode.contains("rebuild"), engine.lastSigMode)
-    assert(engine.lastDupMode.contains("rebuild"), engine.lastDupMode)
+    assert(engine.lastArm("minhash").contains("rebuild"), engine.lastArm("minhash"))
+    assert(engine.lastArm("dupgroups").contains("rebuild"), engine.lastArm("dupgroups"))
     assert(engine.lastRetractRoute.exists(r =>
         r.startsWith("rebuild(") && r.contains("live=29")),
       engine.lastRetractRoute)
@@ -2010,7 +2010,7 @@ class MemoEngineSpec extends SparkTestBase {
       .withColumn("commit_version", lit(2L)))
     assert(engine.dupGroups().collect().map(r =>
       r.getLong(0) -> r.getLong(1)).toMap == oracle())
-    assert(engine.lastSigMode.contains("retract"), engine.lastSigMode)
+    assert(engine.lastArm("minhash").contains("retract"), engine.lastArm("minhash"))
     assert(engine.lastRetractRoute.exists(r =>
         r.startsWith("retract(") && r.contains("live=28")),
       engine.lastRetractRoute)
@@ -2046,7 +2046,7 @@ class MemoEngineSpec extends SparkTestBase {
     engine.save((0 until 3).map(_ => s"---\nbody: ${body(100)}\n")
       .mkString)
     assert(labelsOf() == oracle())
-    assert(engine.lastDupMode.contains("append"), engine.lastDupMode)
+    assert(engine.lastArm("dupgroups").contains("append"), engine.lastArm("dupgroups"))
     val (wApp, cApp) = engine.lastDupPublish.get
     assert(cApp > 0, s"append fold carried no shards: ($wApp, $cApp)")
     assert(wApp < wFull, s"append fold rewrote the grid: ($wApp vs $wFull)")
@@ -2069,7 +2069,7 @@ class MemoEngineSpec extends SparkTestBase {
       .toDF("id", "change", "body", "metadata")
       .withColumn("commit_version", lit(0L)))
     assert(labelsOf() == oracle())
-    assert(engine.lastDupMode.contains("retract"), engine.lastDupMode)
+    assert(engine.lastArm("dupgroups").contains("retract"), engine.lastArm("dupgroups"))
     assert(engine.lastDupPublish.exists(_._2 > 0),
       s"retract fold carried no shards: ${engine.lastDupPublish}")
     val filesRet = artifactFiles(db, "_dupgroups")
@@ -2225,17 +2225,17 @@ class MemoEngineSpec extends SparkTestBase {
       .toDF("id", "change", "body", "metadata")
       .withColumn("commit_version", lit(0L)))
     val hy = engine.hybridRecall("albatross nougat", k = 5).collect()
-    assert(engine.lastLexMode.contains("retract"), engine.lastLexMode)
+    assert(engine.lastArm("lexical").contains("retract"), engine.lastArm("lexical"))
     assert(hy.nonEmpty &&
       !hy.map(_.getAs[String]("body")).contains(victim),
       "lexical retract left the victim findable")
     val ann = engine.annRecall(victim, k = 5).collect()
-    assert(engine.lastIvfMode.contains("retract"), engine.lastIvfMode)
+    assert(engine.lastArm("ivf").contains("retract"), engine.lastArm("ivf"))
     assert(ann.nonEmpty &&
       !ann.map(_.getAs[String]("body")).contains(victim),
       "IVF retract left the victim findable")
     val pq = engine.pqRecall(victim, k = 5).collect()
-    assert(engine.lastPqMode.contains("retract"), engine.lastPqMode)
+    assert(engine.lastArm("ivfpq").contains("retract"), engine.lastArm("ivfpq"))
     assert(pq.nonEmpty &&
       !pq.map(_.getAs[String]("body")).contains(victim),
       "PQ retract left the victim findable")
@@ -2243,7 +2243,7 @@ class MemoEngineSpec extends SparkTestBase {
         (901L, victim),
         (902L, "retract corpus doc 3 about concept3 and aspect3"))
       .toDF("id", "body")).collect().map(_.getLong(0)).toSet
-    assert(engine.lastSigMode.contains("retract"), engine.lastSigMode)
+    assert(engine.lastArm("minhash").contains("retract"), engine.lastArm("minhash"))
     assert(admitted == Set(901L),
       s"victim must readmit, survivor dup must still gate: $admitted")
     // O(touched): every prior artifact DATA file survives byte-identical
@@ -2267,15 +2267,15 @@ class MemoEngineSpec extends SparkTestBase {
     engine.pqRecall("retract corpus doc 5", k = 3).collect()
     engine.admitNew(Seq((903L, "fresh unrelated zebra paragraph"))
       .toDF("id", "body")).collect()
-    assert(engine.lastLexMode.contains("retract") ||
-      engine.lastLexMode.contains("fresh"), engine.lastLexMode)
-    assert(!engine.lastLexMode.contains("rebuild") &&
-      !engine.lastIvfMode.contains("rebuild") &&
-      !engine.lastPqMode.contains("rebuild") &&
-      !engine.lastSigMode.contains("rebuild"),
-      s"metadata-only patch forced a rebuild: lex=${engine.lastLexMode} " +
-        s"ivf=${engine.lastIvfMode} pq=${engine.lastPqMode} " +
-        s"sig=${engine.lastSigMode}")
+    assert(engine.lastArm("lexical").contains("retract") ||
+      engine.lastArm("lexical").contains("fresh"), engine.lastArm("lexical"))
+    assert(!engine.lastArm("lexical").contains("rebuild") &&
+      !engine.lastArm("ivf").contains("rebuild") &&
+      !engine.lastArm("ivfpq").contains("rebuild") &&
+      !engine.lastArm("minhash").contains("rebuild"),
+      s"metadata-only patch forced a rebuild: lex=${engine.lastArm("lexical")} " +
+        s"ivf=${engine.lastArm("ivf")} pq=${engine.lastArm("ivfpq")} " +
+        s"sig=${engine.lastArm("minhash")}")
     mid.foreach { case (fam, files) =>
       val after = artifactFiles(db, fam)
       files.foreach { case (f, m) =>
@@ -2288,33 +2288,44 @@ class MemoEngineSpec extends SparkTestBase {
     // incremental arm — the fold's stamp retreats are not idempotent,
     // so a replay must be impossible by construction: the next patch
     // walk takes the honest rebuild, which sweeps the journal, and the
-    // patch after that retracts again
-    graft.ops.ArtifactMeta.write(spark, s"$db/_minhash",
-      "_retract_journal", "99")
-    engine.applyChanges(Seq(
-        (7L, "removed", "", Map.empty[String, String]))
+    // patch after that retracts again — for every journaled family
+    // (removing ids 7..14, two patches per family)
+    def removeId(id: Long): Unit = engine.applyChanges(Seq(
+        (id, "removed", "", Map.empty[String, String]))
       .toDF("id", "change", "body", "metadata")
-      .withColumn("commit_version", lit(1L)))
-    engine.admitNew(Seq((904L, "zebra paragraph one of a kind"))
-      .toDF("id", "body")).collect()
-    assert(engine.lastSigMode.contains("rebuild"), engine.lastSigMode)
-    assert(graft.ops.ArtifactMeta.read(spark, s"$db/_minhash",
-        "_retract_journal").isEmpty,
-      "the rebuild must sweep the crashed fold's journal")
-    engine.applyChanges(Seq(
-        (8L, "removed", "", Map.empty[String, String]))
-      .toDF("id", "change", "body", "metadata")
-      .withColumn("commit_version", lit(2L)))
-    engine.admitNew(Seq((905L, "gryphon memo equally unique"))
-      .toDF("id", "body")).collect()
-    assert(engine.lastSigMode.contains("retract"), engine.lastSigMode)
+      .withColumn("commit_version", lit(id - 6L)))
+    val walks = Seq[(String, Long => Unit)](
+      "minhash" -> (id => engine.admitNew(Seq((897L + id,
+        s"zebra paragraph one of a kind number $id"))
+        .toDF("id", "body")).collect()),
+      "lexical" -> (_ => engine.hybridRecall("concept1 aspect3", k = 3)
+        .collect()),
+      "ivf" -> (_ => engine.annRecall("retract corpus doc 6", k = 3)
+        .collect()),
+      "ivfpq" -> (_ => engine.pqRecall("retract corpus doc 6", k = 3)
+        .collect()))
+    walks.zipWithIndex.foreach { case ((fam, walk), i) =>
+      graft.ops.ArtifactMeta.write(spark, s"$db/_$fam",
+        "_retract_journal", "99")
+      removeId(7L + 2 * i)
+      walk(7L + 2 * i)
+      assert(engine.lastArm(fam).contains("rebuild"),
+        s"$fam: ${engine.lastArm(fam)}")
+      assert(graft.ops.ArtifactMeta.read(spark, s"$db/_$fam",
+          "_retract_journal").isEmpty,
+        s"$fam: the rebuild must sweep the crashed fold's journal")
+      removeId(8L + 2 * i)
+      walk(8L + 2 * i)
+      assert(engine.lastArm(fam).contains("retract"),
+        s"$fam: ${engine.lastArm(fam)}")
+    }
     // maintain() applies the pending VECTOR tombstones physically:
     // ensureIvf/ensurePq first retract-fold the two delete patches the
     // vector families haven't walked yet, then the apply pass rewrites
     // only the affected cells and drops the tombstone dirs — and a
     // second maintain has nothing pending
     val rep = engine.maintain()
-    assert(engine.lastIvfMode.contains("retract"), engine.lastIvfMode)
+    assert(engine.lastArm("ivf").contains("retract"), engine.lastArm("ivf"))
     assert(rep.get("ivf_apply").contains("applied"), rep)
     assert(rep.get("ivfpq_apply").contains("applied"), rep)
     assert(rep.get("lexical_apply").contains("applied"), rep)
